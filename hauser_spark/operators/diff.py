@@ -73,6 +73,7 @@ def _variant_b(orders: DataFrame) -> DataFrame:
         "'o_orderkey', o_orderkey",
         "'o_orderkey', o_orderkey + 10000000L",
     )
+    assert kept != struct_fields and clone != struct_fields, cols
     fan = (
         "inline(filter(array("
         f"CASE WHEN o_orderkey % 89 != 0 THEN named_struct({kept}) END,"
@@ -82,18 +83,25 @@ def _variant_b(orders: DataFrame) -> DataFrame:
     return orders.selectExpr(fan)
 
 
-def _row_proxy(df: DataFrame) -> DataFrame:
-    """(key, bucket, 60-bit row hash, compared metric) — hashed once."""
+def _with_row_hash(df: DataFrame) -> DataFrame:
+    """``df`` plus its bucket and 60-bit content hash over every column
+    (``df`` needs an ``o_orderkey``)."""
     cols = ", ".join(f"cast({c} as string)" for c in df.columns)
     return df.select(
-        "o_orderkey",
+        "*",
         F.pmod(F.col("o_orderkey"), F.lit(N_BUCKETS)).alias("__bucket"),
         F.expr(
             f"conv(substr(md5(concat_ws('|', {cols})), 1, 15), 16, 10)"
         )
         .cast("long")
         .alias("__rh"),
-        "o_totalprice",
+    )
+
+
+def _row_proxy(df: DataFrame) -> DataFrame:
+    """(key, bucket, 60-bit row hash, compared metric) — hashed once."""
+    return _with_row_hash(df).select(
+        "o_orderkey", "__bucket", "__rh", "o_totalprice"
     )
 
 

@@ -79,13 +79,14 @@ class HauserService:
     # ---------- checkpoint read (S5/S6 + StartTime fallback) ----------
 
     def last_sync_point(self) -> dt.datetime:
+        """The checkpoint, or StartTime while nothing is checkpointed. The
+        database repairs against whichever it returns, so a crash after the
+        very first load is undone too."""
+        start = self.config.start_time
         if self.database is not None:
-            t = self.database.last_sync_point()
-        else:
-            t = self.storage.last_sync_point()
-        if t is None:
-            return self.config.start_time
-        return t
+            return self.database.last_sync_point(fallback=start)
+        t = self.storage.last_sync_point()
+        return start if t is None else t
 
     # ---------- one bundle (internal/service.go:269-360) ----------
 
@@ -187,19 +188,6 @@ def make_database(
             spark, warehouse_dir, partition_expiration=config.partition_expiration
         )
     return SparkWarehouseDatabase(spark, warehouse_dir)
-
-
-def run_multi_tenant(
-    services: list[HauserService], max_bundles_each: int = 10_000
-) -> list[int]:
-    """The multi-hauser recipe (recipes/multi-hauser/README.md:8-31): N
-    independent pipelines, each with its own config/storage/tables, run as
-    a loop of independent jobs sharing one SparkSession. On a cluster these
-    are N concurrent jobs from one driver (Spark schedules them across
-    executors); here we run them round-robin until each catches up to its
-    watermark head (bounded — an unbounded ``run()`` would sleep at the
-    head and starve the remaining tenants)."""
-    return [s.run(max_bundles=max_bundles_each) for s in services]
 
 
 def _go_json_marshal(records: list[dict]) -> bytes:

@@ -1,17 +1,10 @@
 """Bundle CSV serialization (T8: internal/service.go:174-215).
 
-Two paths:
-
-- ``write_bundle_csv_exact`` — byte-parity with Go ``encoding/csv`` for the
-  golden-file contract: header of DBNames, Go quoting rules, ``\\n`` line
-  endings, deterministic order. Streams ``toLocalIterator`` so driver
-  memory stays O(1 row) — the same constant-memory shape as the reference's
-  row-at-a-time writer; a bundle is one export window, not the full table.
-
-- ``write_bundle_csv_distributed`` — the 100 TB path: ``df.write.csv`` with
-  Go-compatible conventions (quote doubling, empty-as-nothing, headers),
-  one directory of part files per bundle. Used when parity-with-golden-bytes
-  is not required; Spark parallelizes the encode across executors.
+``write_bundle_csv_exact`` writes byte-parity with Go ``encoding/csv`` for
+the golden-file contract: header of DBNames, Go quoting rules, ``\\n`` line
+endings, deterministic order. It streams ``toLocalIterator`` so driver
+memory stays O(1 row) — the same constant-memory shape as the reference's
+row-at-a-time writer; a bundle is one export window, not the full table.
 """
 
 from __future__ import annotations
@@ -32,14 +25,6 @@ def _go_csv_field(s: str) -> str:
     return s
 
 
-def encode_rows(header: list[str], rows) -> bytes:
-    out = []
-    out.append(",".join(_go_csv_field(h) for h in header))
-    for row in rows:
-        out.append(",".join(_go_csv_field("" if v is None else str(v)) for v in row))
-    return ("\n".join(out) + "\n").encode()
-
-
 def write_bundle_csv_exact(df: DataFrame, path: str, header: list[str]) -> int:
     """Write a single ordered CSV file byte-compatible with the reference.
 
@@ -56,17 +41,3 @@ def write_bundle_csv_exact(df: DataFrame, path: str, header: list[str]) -> int:
             f.write((line + "\n").encode())
             count += 1
     return count
-
-
-def write_bundle_csv_distributed(df: DataFrame, path: str) -> None:
-    """Scale path: distributed CSV write with Go-compatible conventions."""
-    (
-        df.write.mode("overwrite")
-        .option("header", True)
-        .option("quote", '"')
-        .option("escape", '"')  # quote-doubling, not backslash escaping
-        .option("emptyValue", "")  # empty string ⇒ nothing, like Go
-        .option("nullValue", "")
-        .option("compression", "none")
-        .csv(path)
-    )

@@ -175,12 +175,3 @@ def records_to_dataframe(spark: SparkSession, records: list[dict]) -> DataFrame:
         spark.sparkContext.parallelize(lines, 1)
     )
     return df.withColumn("__hauser_rec_idx", F.monotonically_increasing_id())
-
-
-def window_filter(
-    df: DataFrame, start: dt.datetime, end: dt.datetime, col: str = "EventStart"
-) -> DataFrame:
-    """F1 as a reusable operator: start-inclusive / end-exclusive scan
-    predicate (client/client.go:31-33) — partition-pruned when the source
-    is date-partitioned."""
-    return df.filter((F.col(col) >= F.lit(start)) & (F.col(col) < F.lit(end)))

@@ -119,28 +119,3 @@ def build_parity_projection(
                     ).alias(field.db_name)
                 )
     return df.select(out)
-
-
-def build_typed_projection(df: DataFrame, schema: Schema) -> DataFrame:
-    """Engine-native variant: same shape but typed columns (long/double/
-    timestamp per the schema's 5-type universe) for parquet tables; nulls
-    stay null. CustomVars remains a JSON string column (§1.2 parity note)."""
-    known, custom = partition_columns(df.columns, schema)
-    cv = custom_vars_expr(df, custom)
-    out: list[Column] = []
-    for field in schema:
-        if not field.fs_field_name:
-            out.append(F.lit(None).cast(field.spark_type()).alias(field.db_name))
-        elif field.db_name == "CustomVars":
-            out.append(cv.alias(field.db_name))
-        else:
-            src = known.get(field.fs_field_name.lower())
-            if src is None:
-                out.append(
-                    F.lit(None).cast(field.spark_type()).alias(field.db_name)
-                )
-            else:
-                out.append(
-                    F.col(f"`{src}`").cast(field.spark_type()).alias(field.db_name)
-                )
-    return df.select(out)
