@@ -98,14 +98,31 @@ def stable_avg_sql(expr: str, scale: int = 6) -> str:
     )
 
 
+#: Go ``encoding/json``'s default escapes beyond plain JSON: HTML-special
+#: < > & and the JS-unsafe line/paragraph separators U+2028/U+2029.
+GO_JSON_ESCAPES = (
+    ("<", "\\u003c"),
+    (">", "\\u003e"),
+    ("&", "\\u0026"),
+    ("\u2028", "\\u2028"),
+    ("\u2029", "\\u2029"),
+)
+
+
+def go_json_escape(text: str) -> str:
+    """Apply GO_JSON_ESCAPES to already-marshaled JSON text."""
+    for raw, esc in GO_JSON_ESCAPES:
+        text = text.replace(raw, esc)
+    return text
+
+
 def json_escape_string(col: Column) -> Column:
     """Produce a quoted JSON string literal with correct escaping, JVM-side:
     to_json(array(x)) = '["escaped"]' → strip the brackets. Then apply Go
-    json.Marshal's default HTML escaping of < > & (encoding/json escapes
-    these to \\u003c/\\u003e/\\u0026 unless disabled)."""
+    json.Marshal's default escapes (GO_JSON_ESCAPES)."""
     arr = F.to_json(F.array(col))
     quoted = F.regexp_replace(arr, r"^\[|\]$", "")
-    quoted = F.regexp_replace(quoted, "<", "\\\\u003c")
-    quoted = F.regexp_replace(quoted, ">", "\\\\u003e")
-    quoted = F.regexp_replace(quoted, "&", "\\\\u0026")
+    for raw, esc in GO_JSON_ESCAPES:
+        # a Java replacement string reads backslash as an escape
+        quoted = F.regexp_replace(quoted, raw, esc.replace("\\", "\\\\"))
     return quoted

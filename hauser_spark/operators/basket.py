@@ -7,8 +7,8 @@ and a classic scale trap: the naive formulation is a self-join of the
 twice and materializes every candidate pair across the join.
 
 Scale-path shape used here (one pass, pairs generated JVM-side):
-  1. groupBy(order) → sorted distinct item array — ONE shuffle on the
-     order key, with map-side partial collect_set. Per-order arrays are
+  1. distinct (order, item), then groupBy(order) → sorted item array —
+     ONE shuffle on the order key serves both. Per-order arrays are
      bounded (max 13 distinct parts per order in this data; real basket
      miners cap the basket size exactly like this — a 10k-item basket
      contributes 50M pairs and is pruned, not exploded).
@@ -41,20 +41,23 @@ def pair_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     items = li.select("l_orderkey", "l_partkey")
 
-    # cached: the basket aggregate feeds FOUR consumers (the pair
-    # stream, both lift-denominator reads, the total) — ReusedExchange
-    # dedups only the map-side shuffle write, and each consumer re-ran
-    # the reduce-side collect_set.  The explicit keyed repartition does
-    # double duty: it IS the aggregate's exchange (same key), and being
-    # a user repartition it is never AQE-coalesced, so the cached
-    # frame keeps full parallelism for the CPU-dense pair Generate.
-    baskets = (
+    # cached: the distinct (order, item) stream feeds the basket
+    # aggregate, both lift-denominator reads and the total.  The keyed
+    # user repartition is the one exchange the distinct and the basket
+    # aggregate ride, and is never AQE-coalesced, so the pair Generate
+    # keeps full parallelism.  Caching the stream, not the baskets,
+    # makes each broadcast an aggregate of the cached frame rather than
+    # an explode of it, whose row count Catalyst underestimates
+    # (plan-gated).
+    distinct_items = (
         items.repartition(
             spark.sparkContext.defaultParallelism, "l_orderkey"
         )
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
+        .distinct()
         .cache()
+    )
+    baskets = distinct_items.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_list("l_partkey")).alias("items")
     )
     # all ordered pairs (items[i], items[j]) with i < j, as two stacked
     # codegen'd Generates (posexplode anchors p1, explode of the 1-based
@@ -75,14 +78,10 @@ def pair_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_orders") >= MIN_ORDERS)
     )
 
-    # per-item order counts and the total ride the SAME basket aggregate
-    # (ReusedExchange) instead of a second full shuffle of the fact
-    # table through items.distinct(): collect_set already deduplicated
-    # (order, item), so exploding the baskets is the distinct item list
-    item_orders = (
-        baskets.select(F.explode("items").alias("l_partkey"))
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("item_n"))
+    # per-item order counts and the total ride the same cached stream
+    # instead of a second full shuffle of the fact table
+    item_orders = distinct_items.groupBy("l_partkey").agg(
+        F.count(F.lit(1)).alias("item_n")
     )
     totals = baskets.agg(F.count(F.lit(1)).alias("total_orders"))
 

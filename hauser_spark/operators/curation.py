@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..memo import memo_put
+from ..memo import session_memo
 from .dedup import lsh_pairs_cached
 from .text import tokens_col
 
@@ -39,22 +39,10 @@ MIN_ALPHA_RATIO = 0.6
 # Session memo for the verdict frame: four catalog queries (the verdict
 # table, its histogram, the effective-tokens funnel, the shard plan)
 # compose on the same quality→exact-dup→near-dup pipeline, and the LSH
-# near-dup stage is its expensive leg — build once per (session,
-# sf_dir).  localCheckpoint, not cache(), for the usual reason: the
-# checkpoint block survives an external catalog.clearCache(), so a
-# cache-isolated harness cannot silently revert the memo to a full
-# rebuild (the same device as graph.cc_labels_cached, which holds the
-# same doc-grain frame shape).
-_CURATE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# near-dup stage is its expensive leg.
+@session_memo
 def curate_verdicts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CURATE_MEMO.get(key)
-    if df is None:
-        df = _curate_build(spark, sf_dir).localCheckpoint(eager=False)
-        memo_put(_CURATE_MEMO, key, df)
-    return df
+    return _curate_build(spark, sf_dir).localCheckpoint(eager=False)
 
 
 def curate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,19 +688,12 @@ DSIR_TARGET_LANG = "en"
 # Session memo for the DSIR per-document score frame: the weights
 # table and the ESS audit both consume the same doc-grain
 # (wnum nano-log-ratio, ntok) frame, whose tokenize->hash->count
-# pipeline is the family's CPU leg.  Same bounded localCheckpoint
-# device as the pair-frame/5-gram memos.
-_DSIR_DOC_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# pipeline is the family's CPU leg.
+@session_memo
 def dsir_doc_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, wnum, ntok): per-document DSIR total nano-unit
     log-likelihood ratio (order-free integer dot product of bucket
     counts with the frozen bucket model) and token count."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _DSIR_DOC_MEMO.get(key)
-    if df is not None:
-        return df
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -751,7 +732,7 @@ def dsir_doc_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" * (nt + {DSIR_BUCKETS}))) * 1e9) AS BIGINT) AS lrn",
         )
     )
-    df = (
+    return (
         cdb.join(F.broadcast(lr), "b")
         .groupBy("doc_id", "lang")
         .agg(
@@ -760,8 +741,6 @@ def dsir_doc_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    memo_put(_DSIR_DOC_MEMO, key, df)
-    return df
 
 
 def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

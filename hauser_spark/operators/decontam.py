@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import session_memo
 from ..tables import load_table, values_df
 from .dedup import _shingles
 from .text import tokens_col
@@ -50,23 +51,11 @@ MIX_ALPHA_SQRT = True  # α = 0.5 via sqrt (bit-identical across engines)
 # Session memo for the corpus 5-gram frame: four catalog queries
 # (benchmark_contamination, decontam_matrix, eval_leakage_leaderboard,
 # and curation's dataset card) run the same tokenize→gram→md5 chain —
-# the family's CPU hot spot — over the same corpus.  localCheckpoint,
-# not cache(), for the standard reason (survives an external
-# catalog.clearCache(), so a cache-isolated bench harness cannot
-# silently revert the memo to a full rebuild); bounded by memo_put.
-from ..memo import memo_put  # noqa: E402
-
-_SH5_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# the family's CPU hot spot — over the same corpus.
+@session_memo
 def sh5_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SH5_MEMO.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = _shingles(docs, n=DECON_N).localCheckpoint(eager=False)
-        memo_put(_SH5_MEMO, key, df)
-    return df
+    docs = load_table(spark, sf_dir, "documents")
+    return _shingles(docs, n=DECON_N).localCheckpoint(eager=False)
 
 
 def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..memo import memo_put
+from ..memo import session_memo
 from ..tables import corpus_stat, load_table, values_df
 from .text import tokens_col
 
@@ -678,22 +678,12 @@ def lsh_pairs_frame(docs: DataFrame) -> DataFrame:
 # curation verdict build) all consume the SAME banded candidate-verify
 # pipeline over the same corpus.  Measured at sf0.1: 3.5 s per rebuild
 # vs 0.17 s per warm read of the ~|near-dup|-sized checkpointed result.
-# localCheckpoint, not cache(), for the standard reason (survives an
-# external catalog.clearCache(), so a cache-isolated bench harness
-# cannot silently revert the memo to a full rebuild); bounded by
-# memo_put.  At 100 TB this is the persisted pair-index table every
-# dedup audit reads instead of re-banding the corpus.
-_LSH_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# At 100 TB this is the persisted pair-index table every dedup audit
+# reads instead of re-banding the corpus.
+@session_memo
 def lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LSH_PAIRS_MEMO.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = lsh_pairs_frame(docs).localCheckpoint(eager=False)
-        memo_put(_LSH_PAIRS_MEMO, key, df)
-    return df
+    docs = load_table(spark, sf_dir, "documents")
+    return lsh_pairs_frame(docs).localCheckpoint(eager=False)
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,20 +858,12 @@ def _simhash_pairs_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-# SimHash twin of _LSH_PAIRS_MEMO: the hamming pair frame is read by
-# its own catalog query AND the method-agreement confusion table —
-# same rebuild-per-consumer cost, same bounded-checkpoint cure.
-_SIMHASH_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# SimHash twin of lsh_pairs_cached: the hamming pair frame is read by
+# its own catalog query AND the method-agreement confusion table.
+@session_memo
 def simhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIMHASH_PAIRS_MEMO.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = _simhash_pairs_frame(docs).localCheckpoint(eager=False)
-        memo_put(_SIMHASH_PAIRS_MEMO, key, df)
-    return df
+    docs = load_table(spark, sf_dir, "documents")
+    return _simhash_pairs_frame(docs).localCheckpoint(eager=False)
 
 
 def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

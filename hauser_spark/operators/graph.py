@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..memo import memo_put
+from ..memo import session_memo
 from .dedup import jaccard_pairs_frame
 from .text import tokens_col
 
@@ -147,24 +147,15 @@ def _connected_components(
 # consume the SAME deterministic label frame, and the O(log d)
 # pointer-jumping loop is DRIVER-bound (per-round py4j plan builds +
 # eager checkpoints measured ~2-3 s per rebuild at sf0.1, vs <1 s of
-# actual execution).  Same contract as linkgraph._EDGE_MEMO: held via
-# localCheckpoint (survives catalog.clearCache()), keyed by
-# (applicationId, sf_dir) so a new session or SF rebuilds.
-_CC_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# actual execution).
+@session_memo
 def cc_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load_table as _lt
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CC_MEMO.get(key)
-    if df is None:
-        docs = _lt(spark, sf_dir, "documents")
-        df = _connected_components(_dup_edges(docs)).localCheckpoint(
-            eager=False
-        )
-        memo_put(_CC_MEMO, key, df)
-    return df
+    docs = _lt(spark, sf_dir, "documents")
+    return _connected_components(_dup_edges(docs)).localCheckpoint(
+        eager=False
+    )
 
 
 def dedup_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:

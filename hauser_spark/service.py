@@ -24,6 +24,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .config import Config
+from .functions import go_json_escape
 from .schema import Schema, make_schema
 from .sinks.csv_writer import write_bundle_csv_exact
 from .sinks.storage import LocalStorage
@@ -192,15 +193,8 @@ def make_database(
 
 def _go_json_marshal(records: list[dict]) -> bytes:
     """Go json.Marshal of []map[string]interface{}: sorted keys, compact
-    separators, HTML escaping of < > & (encoding/json defaults)."""
+    separators, encoding/json's default escapes (GO_JSON_ESCAPES)."""
     text = json.dumps(
         records, sort_keys=True, separators=(",", ":"), ensure_ascii=False
     )
-    text = (
-        text.replace("<", "\\u003c")
-        .replace(">", "\\u003e")
-        .replace("&", "\\u0026")
-        .replace("\u2028", "\\u2028")
-        .replace("\u2029", "\\u2029")
-    )
-    return text.encode()
+    return go_json_escape(text).encode()

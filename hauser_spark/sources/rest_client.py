@@ -164,12 +164,7 @@ class RestExportClient:
 
     def _materialize(self, op_id: str) -> list[dict]:
         if op_id not in self._records:
-            while True:
-                _pct, export_id = self.transport.get_progress(op_id)
-                if export_id is not None:
-                    break
-                self._job.sleep(self._job.poll_interval.total_seconds())
-            self._records[op_id] = self.transport.fetch(export_id)
+            self._records[op_id] = self._job.wait(op_id)
         return self._records[op_id]
 
     def get_export_records(self, op_id: str) -> list[dict]:

@@ -93,7 +93,10 @@ class AsyncExportJob:
     poll_interval: dt.timedelta = PROGRESS_POLL_INTERVAL
 
     def run(self, start, end, fields) -> "object":
-        op_id = self.transport.create_export(start, end, fields)
+        return self.wait(self.transport.create_export(start, end, fields))
+
+    def wait(self, op_id: str) -> "object":
+        """Poll ``op_id`` until its export completes, then fetch it."""
         while True:
             _pct, export_id = self.transport.get_progress(op_id)
             if export_id is not None:

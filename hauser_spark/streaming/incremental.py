@@ -788,6 +788,7 @@ def stream_hll_registers(events: DataFrame, state_dir: str, checkpoint_dir: str)
         part.write.mode("overwrite").parquet(
             f"{state_dir}/v{batch_id}/regs"
         )
+        _gc_versions(state_dir, parts=("regs",))
 
     return (
         events.writeStream.foreachBatch(merge_batch)
@@ -860,6 +861,7 @@ def stream_psi_cells(
         part.write.mode("overwrite").parquet(
             f"{state_dir}/v{batch_id}/cells"
         )
+        _gc_versions(state_dir, parts=("cells",))
 
     return (
         events.writeStream.foreachBatch(merge_batch)
@@ -938,6 +940,7 @@ def stream_cms_cells(
         part.write.mode("overwrite").parquet(
             f"{state_dir}/v{batch_id}/cells"
         )
+        _gc_versions(state_dir, parts=("cells",))
 
     return (
         docs.writeStream.foreachBatch(merge_batch)

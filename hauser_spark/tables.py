@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .memo import session_memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -112,33 +114,22 @@ def resolve_path(sf_dir: str, name: str) -> str:
     return src
 
 
-# Session-scoped table memo: ``spark.read.parquet`` costs ~100 ms of
-# driver time per call (file listing + parquet footer schema read), and
-# every query re-resolving its tables re-paid it — measured as ~0.7 s of
-# the build time of a 6-table TPC-H query.  An engine resolves tables
-# through a catalog once; this is that catalog.  Keyed by applicationId
-# (a new SparkSession gets fresh entries) and by the RESOLVED path, so a
-# layout compaction that redirects source → compacted copy misses the
-# memo and re-reads.  DataFrames are immutable, so sharing one scan
-# relation across queries is safe.
-_TABLE_MEMO: dict[tuple[str, str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    path = resolve_path(sf_dir, name)
-    key = (spark.sparkContext.applicationId, sf_dir, name, path)
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None:
-        return memo
-    df = _load_table_uncached(spark, path, name)
-    _TABLE_MEMO[key] = df
-    return df
+    return _load_path(spark, sf_dir, name, resolve_path(sf_dir, name))
 
 
-def _load_table_uncached(
-    spark: SparkSession, path: str, name: str
+# Session-scoped table catalog: ``spark.read.parquet`` costs ~100 ms of
+# driver time per call (file listing + parquet footer schema read), and
+# every query re-resolving its tables re-paid it — measured as ~0.7 s of
+# the build time of a 6-table TPC-H query.  ``sf_dir`` only keys the
+# memo; the RESOLVED path is in the key too, so a layout compaction that
+# redirects source → compacted copy misses the memo and re-reads.  DataFrames are immutable, so sharing one scan
+# relation across queries is safe.
+@session_memo
+def _load_path(
+    spark: SparkSession, sf_dir: str, name: str, path: str
 ) -> DataFrame:
     if name == "events":
         # events.ts is TIMESTAMP(NANOS) parquet, which Spark's vectorized

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .functions import json_escape_string, value_to_string
+from .functions import go_json_escape, json_escape_string, value_to_string
 from .schema import Schema
 
 # Custom-var keys are self-typed by suffix convention (fixture data;
@@ -72,16 +72,8 @@ def custom_vars_expr(df: DataFrame, custom_cols: list[str]) -> Column:
     frags = []
     for name in sorted(custom_cols):
         # Go json.Marshal key text, computed at plan time: raw UTF-8 (no
-        # \uXXXX for non-ASCII) but with encoding/json's default HTML
-        # escaping of < > & and the JS-unsafe line separators
-        key_lit = (
-            json.dumps(name, ensure_ascii=False)
-            .replace("<", "\\u003c")
-            .replace(">", "\\u003e")
-            .replace("&", "\\u0026")
-            .replace(" ", "\\u2028")
-            .replace(" ", "\\u2029")
-        )
+        # \uXXXX for non-ASCII) plus encoding/json's default escapes
+        key_lit = go_json_escape(json.dumps(name, ensure_ascii=False))
         frags.append(
             F.when(
                 F.col(f"`{name}`").isNotNull(),

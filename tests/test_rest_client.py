@@ -166,6 +166,39 @@ def _client(spark, base, segment="everyone"):
     return RestExportClient(spark, transport, sleep=lambda s: None)
 
 
+def test_rest_client_polls_until_completed():
+    """get_export_records drives the shared AsyncExportJob poll loop with
+    a fake transport: two "running" polls, then "completed" — two sleeps
+    of the poll interval, one fetch, and a repeat read served from the
+    client without polling again."""
+
+    class FakeTransport:
+        def __init__(self):
+            self.polls = 0
+            self.fetched = []
+
+        def create_export(self, start, end, fields):
+            return "op1"
+
+        def get_progress(self, op_id):
+            self.polls += 1
+            return (100, "exp1") if self.polls == 3 else (40, None)
+
+        def fetch(self, export_id):
+            self.fetched.append(export_id)
+            return [{"EventType": "click"}]
+
+    sleeps = []
+    transport = FakeTransport()
+    rest = RestExportClient(None, transport, sleep=sleeps.append)
+    op = rest.create_export(WIN_START, WIN_END, [])
+    assert rest.get_export_records(op) == [{"EventType": "click"}]
+    assert sleeps == [5.0, 5.0]
+    assert transport.polls == 3 and transport.fetched == ["exp1"]
+    assert rest.get_export_records(op) == [{"EventType": "click"}]
+    assert transport.polls == 3 and len(sleeps) == 2
+
+
 def test_rest_records_match_fixture_client(spark, stub):
     base, state = stub
     rest = _client(spark, base)

@@ -63,21 +63,46 @@ def test_welch_ttest_normal_path_unchanged(spark):
 
 
 def test_memo_put_bounds_and_evicts_cross_app():
-    """Session memos hold localCheckpoint blocks; the bounded put must
-    cap per-application entries FIFO and eagerly drop entries from
+    """Session memos hold localCheckpoint blocks; the memo decorator must
+    cap per-application sf_dirs FIFO and eagerly drop entries from
     other (dead) applications (ADVICE r6)."""
-    from hauser_spark.memo import MEMO_MAX_ENTRIES, memo_put
+    from types import SimpleNamespace
 
-    memo = {}
+    from hauser_spark.memo import MEMO_MAX_ENTRIES, session_memo
+
+    def session(app):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+    @session_memo
+    def build(spark, sf_dir):
+        return sf_dir
+
+    memo = build.memo
     for i in range(MEMO_MAX_ENTRIES + 3):
-        memo_put(memo, ("app-1", f"sf{i}"), i)
+        build(session("app-1"), f"sf{i}")
     assert len(memo) == MEMO_MAX_ENTRIES
     # FIFO: oldest sf_dirs evicted, newest retained
     assert ("app-1", "sf0") not in memo
     assert ("app-1", f"sf{MEMO_MAX_ENTRIES + 2}") in memo
     # a new application evicts every stale entry
-    memo_put(memo, ("app-2", "sfX"), 99)
+    build(session("app-2"), "sfX")
     assert list(memo) == [("app-2", "sfX")]
+
+    # the bound counts sf_dirs, not entries: extra arguments (a table
+    # name) share their sf_dir's slot and are evicted with it
+    @session_memo
+    def table(spark, sf_dir, name):
+        return name
+
+    for i in range(MEMO_MAX_ENTRIES):
+        for name in ("a", "b"):
+            table(session("app-1"), f"sf{i}", name)
+    assert len(table.memo) == 2 * MEMO_MAX_ENTRIES
+    table(session("app-1"), "sfN", "a")
+    assert {k[1] for k in table.memo} == {
+        f"sf{i}" for i in range(1, MEMO_MAX_ENTRIES)
+    } | {"sfN"}
+    assert len(table.memo) == 2 * MEMO_MAX_ENTRIES - 1
 
 
 def test_memoized_families_still_share_frames(spark):
@@ -85,12 +110,13 @@ def test_memoized_families_still_share_frames(spark):
     the same session reuse one checkpointed verdict frame."""
     from hauser_spark.operators import curation
 
-    curation._CURATE_MEMO.clear()
+    memo = curation.curate_verdicts_cached.memo
+    memo.clear()
     curation.effective_tokens(spark, SF).collect()
-    assert len(curation._CURATE_MEMO) == 1
-    first = next(iter(curation._CURATE_MEMO.values()))
+    assert len(memo) == 1
+    first = next(iter(memo.values()))
     curation.shard_skew(spark, SF).collect()
-    assert next(iter(curation._CURATE_MEMO.values())) is first
+    assert next(iter(memo.values())) is first
 
 
 def test_url_canonicalizer_handles_the_standard_messes(spark):

@@ -522,6 +522,7 @@ def test_streaming_hll_registers_equal_batch(spark, tmp_path):
         read_hll_registers,
         stream_hll_registers,
     )
+    from hauser_spark.streaming.incremental import _committed_versions
     from hauser_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -553,6 +554,8 @@ def test_streaming_hll_registers_equal_batch(spark, tmp_path):
         map(tuple, hll_register_partials(ev).collect())
     )
     assert got == expected and len(expected) > 0
+    # state GC: 4 drained batches leave only the replay horizon
+    assert len(_committed_versions(state, parts=("regs",))) <= 2
 
     # idempotent restart on the drained checkpoint
     q2 = stream_hll_registers(mk(), state, ckpt)
@@ -571,6 +574,7 @@ def test_streaming_psi_cells_equal_batch(spark, tmp_path):
     ``profile_psi_drift``'s. A restart on the drained checkpoint
     changes nothing (versioned landing is idempotent)."""
     from hauser_spark.streaming import read_psi_cells, stream_psi_cells
+    from hauser_spark.streaming.incremental import _committed_versions
     from hauser_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -639,6 +643,8 @@ def test_streaming_psi_cells_equal_batch(spark, tmp_path):
     expected = sorted(map(tuple, batch_cells.collect()))
     got = sorted(map(tuple, read_psi_cells(spark, state).collect()))
     assert got == expected and len(expected) > 0
+    # state GC: 4 drained batches leave only the replay horizon
+    assert len(_committed_versions(state, parts=("cells",))) <= 2
 
     # idempotent restart on the drained checkpoint
     q2 = stream_psi_cells(
@@ -661,6 +667,7 @@ def test_streaming_cms_cells_equal_batch(spark, tmp_path):
     from hauser_spark.operators.sketches import CMS_D, _cms_bucket
     from hauser_spark.operators.text import tokens_col
     from hauser_spark.streaming import read_cms_cells, stream_cms_cells
+    from hauser_spark.streaming.incremental import _committed_versions
     from hauser_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -712,6 +719,8 @@ def test_streaming_cms_cells_equal_batch(spark, tmp_path):
     expected = sorted(map(tuple, batch_cells.collect()))
     got = sorted(map(tuple, read_cms_cells(spark, state).collect()))
     assert got == expected and len(expected) > 0
+    # state GC: 4 drained batches leave only the replay horizon
+    assert len(_committed_versions(state, parts=("cells",))) <= 2
 
     q2 = stream_cms_cells(mk(), state, ckpt)
     q2.awaitTermination()

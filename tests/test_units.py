@@ -197,6 +197,27 @@ def test_transform_custom_vars_pivot(spark):
     assert got["CustomVars"] == '{"evt_a_real":4,"evt_b_str":"x"}'
 
 
+def test_transform_custom_vars_go_escapes_match_marshal(spark):
+    """A CustomVars string value gets Go json.Marshal's default escapes,
+    U+2028/U+2029 included: the projected text equals the service's
+    _go_json_marshal of the same key and value."""
+    from hauser_spark.service import _go_json_marshal
+
+    schema = Schema(
+        [
+            WarehouseField("EventType", "EventType", "string"),
+            WarehouseField("CustomVars", "CustomVars", "string"),
+        ]
+    )
+    value = "a\u2028b\u2029c<&>"
+    got = _project_one(
+        spark, {"EventType": "custom", "evt_s_str": value}, schema
+    )
+    want = _go_json_marshal([{"evt_s_str": value}]).decode()[1:-1]
+    assert "\\u2028" in want and "\\u2029" in want
+    assert got["CustomVars"] == want
+
+
 def test_transform_missing_field_empty(spark):
     schema = Schema(
         [
@@ -279,6 +300,40 @@ def test_operator_catalog_is_current():
     with open("OPERATORS.md") as f:
         on_disk = f.read()
     assert on_disk == gen_catalog.render()
+
+
+def test_only_memo_reads_application_id():
+    """Session-scoped state is keyed in one place, ``memo.session_memo``.
+    The one exception is ``tables.register_views``: it tracks the LAST
+    sf_dir registered per application, and a memo keyed by sf_dir would
+    skip re-registering A after the sequence A, B, A."""
+    import ast
+    import pathlib
+
+    import hauser_spark
+
+    root = pathlib.Path(hauser_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "memo.py":
+            continue
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if rel == "tables.py":
+            fn = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "register_views"
+            )
+            allowed = set(range(fn.lineno, fn.end_lineno + 1))
+        offenders += [
+            f"{rel}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute)
+            and n.attr == "applicationId"
+            and n.lineno not in allowed
+        ]
+    assert not offenders, offenders
 
 
 def test_table_memo_invalidates_on_layout_change(spark, tmp_path, monkeypatch):

@@ -77,8 +77,10 @@ def test_escaped_string_literals_mode(spark):
     schema = "i int, s string"
     expected = sorted(rows)
     assert sorted(_rows(values_df(spark, rows, schema))) == expected
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    key = "spark.sql.parser.escapedStringLiterals"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "true")
     try:
         assert sorted(_rows(values_df(spark, rows, schema))) == expected
     finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+        spark.conf.set(key, prior)
