@@ -380,32 +380,19 @@ _CONTROL_REFERENCE = {
     # same r7-pinned mid-range slot).
     "events_transition_matrix": 0.533,
     "events_sliding_windows": 0.524,
-    "basket_pair_cooccurrence": 1.361,
-    "diff_table_reconcile": 1.471,
-    "dedup_containment": 1.721,
-    "sketch_theta_set_ops": 1.448,
-    # slow (iterative / driver-synchronized).  sim_kmeans_lloyd was
-    # dropped as a control in round 10: the SQL-string distance rewrite
-    # made it ~2x faster BY DESIGN, so it no longer measures the host
-    # (profile_join_cardinality_audit — untouched join/scan-heavy
-    # executor-side work, flat r8→r9 — replaces it at the same slow
-    # slot).  Reference RE-BASELINED in round 11 (ADVICE r10): the 2.347
-    # figure was the query's r7-era raw time measured under a different
-    # regime; the fresh quiet-host measurement (micro-control-detrended,
-    # mapped through the OTHER 14 controls' Theil-Sen fit) reads 1.933.
-    "profile_join_cardinality_audit": 1.933,
-    # text_bpe_train and graph_pagerank were dropped as controls in
-    # round 11: both were rewritten ~25-40% faster BY DESIGN (array-fold
-    # BPE, single-SQL pagerank), so they no longer measure the host —
-    # left in, they dragged the Theil-Sen slope to 0.88 while the true
-    # host level was ~1.27x and pushed the floor past the clamp
-    # (observed on the first r11 full run).  customer_rfm_segments
-    # (untouched join/window-heavy executor work, stable since round 5)
-    # replaces them; its reference is the median of four fit-mapped
-    # quiet-ish measurements (1.24-1.74 under heavy host banding —
-    # ±20% pin uncertainty, which the median-of-slopes fit tolerates
-    # for any single control).
-    "customer_rfm_segments": 1.460,
+    # Swapped in after round 12, which made basket_pair_cooccurrence,
+    # diff_table_reconcile, dedup_containment, sketch_theta_set_ops,
+    # profile_join_cardinality_audit and customer_rfm_segments faster
+    # by design.  Each replacement's module is unchanged since the
+    # committed BENCH_FULL.json; its reference is that run's detrended
+    # time mapped through the eight remaining controls' Theil-Sen fit
+    # (floor 0.0, slope 0.9218).
+    "trimmed_mean_price": 0.680,
+    "q8_market_share": 0.721,
+    "profile_id_gap_islands": 0.877,
+    "sample_ipf_raking": 1.189,
+    "profile_zorder_pruning_gain": 1.494,
+    "stats_poisson_bootstrap_ci": 1.728,
 }
 
 
@@ -764,6 +751,14 @@ def main() -> None:
             "(reference re-baselined r11)",
             "r11: text_bpe_train + graph_pagerank (both rewritten "
             "faster by design) -> customer_rfm_segments",
+            "after r12: basket_pair_cooccurrence, diff_table_reconcile, "
+            "dedup_containment, sketch_theta_set_ops, "
+            "profile_join_cardinality_audit, customer_rfm_segments "
+            "(all made faster by design in r12) -> trimmed_mean_price, "
+            "q8_market_share, profile_id_gap_islands, sample_ipf_raking, "
+            "profile_zorder_pruning_gain, stats_poisson_bootstrap_ci "
+            "(references mapped from the r12 BENCH_FULL through the "
+            "other eight controls' fit)",
         ],
     }
     if model:

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass, field
@@ -34,6 +35,8 @@ from .transform import build_parity_projection
 from .windows import next_bundle_window, wait_duration
 
 UTC = dt.timezone.utc
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -164,7 +167,14 @@ class HauserService:
             except Exception:
                 if step >= self.config.backoff_steps_max:
                     raise
-                sleep(self.config.backoff.total_seconds() * (2**step))
+                delay = self.config.backoff.total_seconds() * (2**step)
+                log.warning(
+                    "bundle failed; backoff step %d, sleeping %g s",
+                    step,
+                    delay,
+                    exc_info=True,
+                )
+                sleep(delay)
                 step += 1
                 continue
             if not result.processed:

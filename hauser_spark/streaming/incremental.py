@@ -15,7 +15,9 @@ zone of files (or Kafka, with a one-line source swap):
 - W3 trigger loop          → ``trigger(availableNow=True)`` for catch-up,
                              ``processingTime`` for steady state
 - W4 checkpoint            → ``checkpointLocation`` (replaces the sync
-                             table when streaming owns the pipeline)
+                             table when streaming owns the pipeline),
+                             plus epoch-versioned state for the twins'
+                             running aggregates (``_fold_versioned``)
 
 Scale notes: file-source streaming lists incrementally
 (``maxFilesPerTrigger`` bounds a micro-batch); the windowed aggregate is
@@ -27,9 +29,34 @@ bundle-at-a-time load with exactly-once file-sink semantics.
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _committed_dirs(
+    base: str, name: str, parts: tuple[str, ...] = ("",)
+) -> dict[str, str]:
+    """Subdirectories of ``base`` whose name fully matches the regex
+    ``name`` and whose parquet write(s) COMMITTED — every part dir
+    carries Spark's ``_SUCCESS`` marker — as {regex group: path}.  A
+    crash mid-write leaves a dir without the marker; a reader that took
+    it would read torn data until the replaying writer overwrites it."""
+    if not os.path.isdir(base):
+        return {}
+    out = {}
+    for d in os.listdir(base):
+        m = re.fullmatch(name, d)
+        if m and all(
+            os.path.exists(os.path.join(base, d, p, "_SUCCESS"))
+            for p in parts
+        ):
+            out[m.group(1)] = os.path.join(base, d)
+    return out
 
 
 def _committed_versions(
@@ -38,56 +65,101 @@ def _committed_versions(
     below: int | None = None,
     parts: tuple[str, ...] = ("",),
 ) -> list[int]:
-    """Version numbers ``v{N}`` under ``state_dir`` whose parquet
-    write(s) COMMITTED — every part dir carries Spark's ``_SUCCESS``
-    marker.  ``merge_batch`` only guarantees versions < batch_id are
-    complete *for the replaying writer*; a crash mid-write of
-    ``v{batch_id}`` leaves a partial dir that a concurrent or offline
-    reader must not pick as latest (it would read torn state until the
-    replay overwrites it).  Requiring the marker makes 'readers take
-    the highest complete one' literally true."""
-    import os
-    import re
-
-    out: list[int] = []
-    if not os.path.isdir(state_dir):
-        return out
-    for d in os.listdir(state_dir):
-        m = re.match(r"v(\d+)$", d)
-        if not m:
-            continue
-        n = int(m.group(1))
-        if below is not None and n >= below:
-            continue
-        if all(
-            os.path.exists(os.path.join(state_dir, d, p, "_SUCCESS"))
-            for p in parts
-        ):
-            out.append(n)
-    return out
+    """Committed version numbers ``v{N}`` under ``state_dir`` (only
+    those below ``below`` when given)."""
+    versions = map(int, _committed_dirs(state_dir, r"v(\d+)", parts))
+    return [n for n in versions if below is None or n < below]
 
 
 def _gc_versions(
     state_dir: str, *, keep: int = 2, parts: tuple[str, ...] = ("",)
 ) -> None:
-    """Drop committed state versions older than the newest ``keep``
-    (ADVICE r10: without GC the state directory grows linearly with
-    batch count × state size).  Default keeps the latest version plus
-    its predecessor: a crash between the state write of batch N and its
-    checkpoint commit replays batch N, whose rebuild reads the highest
-    committed version *below* N — the predecessor.  Structured
-    Streaming never replays further back than the last uncommitted
-    batch, so two versions are the complete replay horizon.  Partial
-    (uncommitted) dirs are left alone — the replaying writer owns
-    them."""
-    import os
-    import shutil
+    """Drop committed state versions older than the newest ``keep``.
+    Uncommitted dirs are left alone: the replaying writer owns them."""
+    committed = _committed_dirs(state_dir, r"v(\d+)", parts)
+    for n in sorted(committed, key=int)[:-keep]:
+        shutil.rmtree(committed[n], ignore_errors=True)
 
-    versions = sorted(_committed_versions(state_dir, parts=parts))
-    for n in versions[:-keep]:
-        shutil.rmtree(
-            os.path.join(state_dir, f"v{n}"), ignore_errors=True
-        )
+
+def _read_latest(
+    spark: SparkSession,
+    state_dir: str,
+    parts: tuple[str, ...] = ("",),
+    below: int | None = None,
+):
+    """The latest committed version of a ``_fold_versioned`` state (the
+    latest below ``below`` when given): one DataFrame for a one-part
+    state, a tuple in ``parts`` order otherwise; None when no version
+    has committed."""
+    versions = _committed_versions(state_dir, below=below, parts=parts)
+    if not versions:
+        return None
+    base = f"{state_dir}/v{max(versions)}"
+    frames = tuple(spark.read.parquet(f"{base}/{p}".rstrip("/")) for p in parts)
+    return frames if len(parts) > 1 else frames[0]
+
+
+def _fold_versioned(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    fold,
+    parts: tuple[str, ...] = ("",),
+):
+    """Maintain ``fold`` over ``stream`` as epoch-versioned state — the
+    one exactly-once protocol of every streaming twin's state, and the
+    Structured Streaming form of hauser's checkpoint protocol (W4).
+
+    The stream drains with ``trigger(availableNow=True)`` under
+    ``checkpoint_dir``.  Micro-batch ``batch_id`` calls
+    ``fold(batch_df, prev)``, where ``prev`` is the highest committed
+    version below ``batch_id`` (None before the first), and writes the
+    result to ``{state_dir}/v{batch_id}/<part>``.  A state of one part
+    is a DataFrame; a state of several is a tuple in ``parts`` order
+    (the one-part default ``("",)`` writes ``v{batch_id}`` itself).
+
+    - Commit rule: a version exists only once every part dir carries
+      Spark's ``_SUCCESS`` marker.  A crash mid-write leaves a partial
+      dir that neither the next fold nor ``_read_latest`` takes.
+    - Replay-overwrite: a micro-batch replayed after a crash between
+      its state write and its checkpoint commit reads the same
+      predecessor and overwrites its own ``v{batch_id}``, so the landing
+      is deterministic and no repair pass is needed.
+    - Two-version horizon: after each write, committed versions older
+      than the newest two are dropped (``_gc_versions``).  Structured
+      Streaming replays at most the last uncommitted batch, whose
+      rebuild reads its predecessor, so latest plus predecessor is the
+      whole replay horizon and state on disk stays bounded.
+
+    Returns the started query."""
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        prev = _read_latest(batch_df.sparkSession, state_dir, parts, batch_id)
+        out = fold(batch_df, prev)
+        for p, df in zip(parts, out if len(parts) > 1 else (out,)):
+            df.write.mode("overwrite").parquet(
+                f"{state_dir}/v{batch_id}/{p}".rstrip("/")
+            )
+        _gc_versions(state_dir, parts=parts)
+
+    return (
+        stream.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _merged(prev, part: DataFrame, keys: tuple[str, ...], *aggs) -> DataFrame:
+    """A keyed-monoid fold: ``part`` alone before the first version,
+    else the union with ``prev`` re-aggregated per ``keys``."""
+    if prev is None:
+        return part
+    return prev.unionByName(part).groupBy(*keys).agg(*aggs)
+
+
+def _sums(*cols: str) -> list:
+    return [F.sum(c).alias(c) for c in cols]
 
 
 EVENT_STREAM_SCHEMA = T.StructType(
@@ -368,45 +440,26 @@ def run_available_now(
 
 
 def stream_rollup_merge(events: DataFrame, state_dir: str, checkpoint_dir: str):
-    """Streaming materialized-view maintenance: ``foreachBatch`` merges
-    each micro-batch's partial (day, type) aggregates into a persistent
-    rollup — the streaming twin of ``operators/incremental`` and it
-    reuses the SAME ``merge_rollups`` combine step, so batch refresh
-    and streaming refresh are provably the one algebraic merge.
-
-    Exactly-once without a repair pass: state is versioned per epoch
-    (``v{batch_id}``). A retried micro-batch deterministically rebuilds
-    its version from the predecessor version plus its own (replayed)
-    input, and readers only ever see the highest complete version —
-    the same recipe as Delta's transaction-log MVs. State size is the
+    """Streaming materialized-view maintenance: each micro-batch's
+    partial (day, type) aggregates merge into a persistent rollup — the
+    streaming twin of ``operators/incremental``, reusing the SAME
+    ``merge_rollups`` combine step, so batch refresh and streaming
+    refresh are provably the one algebraic merge.  State size is the
     rollup (|days|×|types|), so each merge touches KBs regardless of
     stream volume."""
     from ..operators.incremental import _partial_rollup, merge_rollups
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        partial = _partial_rollup(batch_df)
-        versions = _committed_versions(state_dir, below=batch_id)
-        if versions:
-            state = sp.read.parquet(f"{state_dir}/v{max(versions)}")
-            merged = merge_rollups(state, partial)
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        _gc_versions(state_dir)
+    def fold(batch_df: DataFrame, prev):
+        part = _partial_rollup(batch_df)
+        return part if prev is None else merge_rollups(prev, part)
 
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_versioned(events, state_dir, checkpoint_dir, fold)
 
 
 def read_rollup_state(spark, state_dir: str) -> DataFrame:
-    """Latest committed rollup version (readers never see a partial)."""
-    versions = _committed_versions(state_dir)
-    return spark.read.parquet(f"{state_dir}/v{max(versions)}")
+    """Latest committed rollup version (readers never see a partial);
+    None before the first micro-batch commits."""
+    return _read_latest(spark, state_dir)
 
 
 DOC_STREAM_SCHEMA = T.StructType(
@@ -433,6 +486,11 @@ def stream_documents(
     return reader.load(source_dir)
 
 
+#: One partition of the minhash index: the bootstrap corpus, or the
+#: accepted docs (and drop decisions) of one micro-batch.
+_INDEX_PARTITION = r"batch=(bootstrap|\d+)"
+
+
 def bootstrap_minhash_index(docs: DataFrame, index_dir: str) -> None:
     """Materialize the at-rest LSH index of an existing corpus: its
     banded signature keys plus its shingle store (for candidate
@@ -444,22 +502,6 @@ def bootstrap_minhash_index(docs: DataFrame, index_dir: str) -> None:
         "overwrite"
     ).parquet(f"{index_dir}/bands/batch=bootstrap")
     sh.write.mode("overwrite").parquet(f"{index_dir}/shingles/batch=bootstrap")
-
-
-def _committed_parts(base: str, before_batch: int) -> list:
-    import os
-    import re
-
-    if not os.path.isdir(base):
-        return []
-    out = []
-    for d in os.listdir(base):
-        m = re.match(r"batch=(bootstrap|\d+)$", d)
-        if m and (
-            m.group(1) == "bootstrap" or int(m.group(1)) < before_batch
-        ):
-            out.append(os.path.join(base, d))
-    return out
 
 
 def stream_minhash_dedup(
@@ -480,20 +522,28 @@ def stream_minhash_dedup(
 
     Exactly-once: every write lands under ``batch=<epoch>`` with
     overwrite — a replayed micro-batch deterministically rewrites its
-    own partition and readers union only committed partitions (the
-    same versioned-epoch recipe as ``stream_rollup_merge``). Index
-    growth is append-only: per batch one new partition of
+    own partition, and the probe and ``read_dedup_decisions`` union only
+    partitions whose write committed (``_SUCCESS``). Index growth is
+    append-only: per batch one new partition of
     O(|accepted batch|) rows; nothing existing is rewritten, so index
     maintenance cost is independent of corpus size."""
     from ..operators import dedup as dd
+
+    def committed_below(kind: str, batch_id: int) -> list[str]:
+        found = _committed_dirs(f"{index_dir}/{kind}", _INDEX_PARTITION)
+        return [
+            path
+            for b, path in found.items()
+            if b == "bootstrap" or int(b) < batch_id
+        ]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
         sh_in = dd._shingles(batch_df).cache()
         b_in = dd.banded_keys(dd._minhash_signatures(sh_in)).cache()
 
-        band_parts = _committed_parts(f"{index_dir}/bands", batch_id)
-        sh_parts = _committed_parts(f"{index_dir}/shingles", batch_id)
+        band_parts = committed_below("bands", batch_id)
+        sh_parts = committed_below("shingles", batch_id)
         if band_parts and sh_parts:
             b_co = sp.read.parquet(*band_parts)
             sh_co = sp.read.parquet(*sh_parts)
@@ -559,8 +609,8 @@ def stream_minhash_dedup(
 
 def read_dedup_decisions(spark: SparkSession, index_dir: str) -> DataFrame:
     """All committed drop decisions (d_new, d_old, jaccard)."""
-    parts = _committed_parts(f"{index_dir}/decisions", 1 << 62)
-    return spark.read.parquet(*parts)
+    found = _committed_dirs(f"{index_dir}/decisions", _INDEX_PARTITION)
+    return spark.read.parquet(*found.values())
 
 
 # ---------------------------------------------------- corpus stats at ingest
@@ -631,50 +681,31 @@ def merge_corpus_stats(
     return sums, buckets
 
 
+#: The two parts of the corpus-stats state: per-source sums and the
+#: per-(source, bucket) token-hash minima.
+CORPUS_STATS_PARTS = ("sums", "buckets")
+
+
 def stream_corpus_stats(docs: DataFrame, state_dir: str, checkpoint_dir: str):
     """Streaming maintenance of the corpus statistics table — the
     ingest-side realization of the per-session stats memo: each
-    micro-batch's partials merge into versioned state exactly like
-    ``stream_rollup_merge`` (epoch-versioned, replay-safe, readers see
-    the highest complete version).  State per version is
-    |sources| + |sources|·B rows regardless of stream volume."""
+    micro-batch's partials merge into the state through the shared
+    ``merge_corpus_stats``.  State per version is |sources| +
+    |sources|·B rows regardless of stream volume."""
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        p_sums, p_buckets = _stats_partial(batch_df)
-        versions = _committed_versions(
-            state_dir, below=batch_id, parts=("sums", "buckets")
-        )
-        if versions:
-            base = f"{state_dir}/v{max(versions)}"
-            p_sums, p_buckets = merge_corpus_stats(
-                sp.read.parquet(f"{base}/sums"),
-                sp.read.parquet(f"{base}/buckets"),
-                p_sums,
-                p_buckets,
-            )
-        out = f"{state_dir}/v{batch_id}"
-        p_sums.write.mode("overwrite").parquet(f"{out}/sums")
-        p_buckets.write.mode("overwrite").parquet(f"{out}/buckets")
-        _gc_versions(state_dir, parts=("sums", "buckets"))
+    def fold(batch_df: DataFrame, prev):
+        part = _stats_partial(batch_df)
+        return part if prev is None else merge_corpus_stats(*prev, *part)
 
-    return (
-        docs.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_versioned(
+        docs, state_dir, checkpoint_dir, fold, CORPUS_STATS_PARTS
     )
 
 
 def read_corpus_stats(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest committed stats: per-source doc/token counts plus the
     KMV vocabulary estimate folded from the bucket minima."""
-    versions = _committed_versions(state_dir, parts=("sums", "buckets"))
-    base = f"{state_dir}/v{max(versions)}"
-    sums = spark.read.parquet(f"{base}/sums")
-    buckets = spark.read.parquet(f"{base}/buckets")
-    from pyspark.sql import Window
-
+    sums, buckets = _read_latest(spark, state_dir, CORPUS_STATS_PARTS)
     w = Window.partitionBy("source").orderBy("h")
     per = (
         buckets.withColumn("rn", F.row_number().over(w))
@@ -706,8 +737,6 @@ def merge_compaction(state: DataFrame, partial: DataFrame) -> DataFrame:
     so batch compaction and any micro-batch split compose to the same
     state — the algebraic-merge property streaming correctness rides.
     """
-    from pyspark.sql import functions as F
-
     u = state.unionByName(partial)
     return u.groupBy("k").agg(
         F.expr("max_by(final_op, max_epoch)").alias("final_op"),
@@ -719,92 +748,56 @@ def merge_compaction(state: DataFrame, partial: DataFrame) -> DataFrame:
 
 def stream_cdc_compaction(cdc: DataFrame, state_dir: str, checkpoint_dir: str):
     """Streaming CDC latest-wins compaction — the streaming twin of
-    ``operators/merge.cdc_log_compaction``: ``foreachBatch`` reduces
-    each micro-batch to per-key ``max_by`` partials (one record per
-    key per batch, regardless of log volume) and merges them into the
-    epoch-versioned persistent state, the same exactly-once recipe as
-    ``stream_rollup_merge`` (a retried micro-batch deterministically
-    rebuilds its version from the predecessor plus its replayed input;
-    readers only see the highest complete version).
+    ``operators/merge.cdc_log_compaction``: each micro-batch reduces to
+    per-key ``max_by`` partials (one record per key per batch,
+    regardless of log volume) merged into the state by the shared
+    ``merge_compaction``.
 
     This is the continuously-compacted-changelog shape (Kafka compacted
     topic / Delta CDF consumer): state size is |live keys|, each merge
     shuffles one record per (key seen this batch) — never the log.
     """
-    from pyspark.sql import functions as F
 
-    def compact_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        partial = batch_df.groupBy("k").agg(
+    def fold(batch_df: DataFrame, prev):
+        part = batch_df.groupBy("k").agg(
             F.expr("max_by(op, epoch)").alias("final_op"),
             F.expr("max_by(price, epoch)").alias("final_price"),
             F.max("epoch").alias("max_epoch"),
             F.count(F.lit(1)).alias("n_versions"),
         )
-        versions = _committed_versions(state_dir, below=batch_id)
-        if versions:
-            state = sp.read.parquet(f"{state_dir}/v{max(versions)}")
-            merged = merge_compaction(state, partial)
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        _gc_versions(state_dir)
+        return part if prev is None else merge_compaction(prev, part)
 
-    return (
-        cdc.writeStream.foreachBatch(compact_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_versioned(cdc, state_dir, checkpoint_dir, fold)
 
 
 def stream_hll_registers(events: DataFrame, state_dir: str, checkpoint_dir: str):
     """Streaming maintenance of the per-type HyperLogLog registers —
     the 11th batch-equivalence twin: each micro-batch computes its
     register partials (``operators/sketches.py:hll_register_partials``)
-    and merges them into epoch-versioned state by pairwise register
-    MAX, the sketch's algebraic combine.  Replay-safe exactly like
-    ``stream_rollup_merge``: a replayed batch re-merges idempotently
-    (max is idempotent), readers see the highest complete version, and
-    state per version is ≤ |types|·2^p rows regardless of stream
-    volume — the always-on cardinality dashboard shape.
+    and merges them into the state by pairwise register MAX, the
+    sketch's algebraic combine.  State per version is ≤ |types|·2^p rows
+    regardless of stream volume — the always-on cardinality dashboard
+    shape.
     """
 
     from ..operators.sketches import hll_register_partials
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        part = hll_register_partials(batch_df)
-        versions = _committed_versions(
-            state_dir, below=batch_id, parts=("regs",)
+    def fold(batch_df: DataFrame, prev):
+        return _merged(
+            prev,
+            hll_register_partials(batch_df),
+            ("event_type", "j"),
+            F.max("m").alias("m"),
         )
-        if versions:
-            prev = sp.read.parquet(f"{state_dir}/v{max(versions)}/regs")
-            part = (
-                prev.unionByName(part)
-                .groupBy("event_type", "j")
-                .agg(F.max("m").alias("m"))
-            )
-        part.write.mode("overwrite").parquet(
-            f"{state_dir}/v{batch_id}/regs"
-        )
-        _gc_versions(state_dir, parts=("regs",))
 
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_versioned(
+        events, state_dir, checkpoint_dir, fold, ("regs",)
     )
 
 
 def read_hll_registers(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest committed register state, (event_type, j, m) ordered."""
-    versions = _committed_versions(state_dir, parts=("regs",))
-    return (
-        spark.read.parquet(f"{state_dir}/v{max(versions)}/regs")
-        .orderBy("event_type", "j")
-    )
+    return _read_latest(spark, state_dir, ("regs",)).orderBy("event_type", "j")
 
 
 def stream_psi_cells(
@@ -819,19 +812,15 @@ def stream_psi_cells(
     the 12th batch-equivalence twin: each micro-batch buckets its rows
     against the FIXED reference grid (bounds are monitor config, as in
     any production drift monitor) and merges (event_type, period,
-    bucket) counts into epoch-versioned state by SUM — the count
-    table's algebraic combine.  Replay-safe like ``stream_rollup_merge``:
-    a replayed batch recomputes its version from the same predecessor,
-    so the landing is idempotent; readers see the highest complete
-    version; state is ≤ |types|·2·B rows regardless of stream volume.
+    bucket) counts into the state by SUM — the count table's algebraic
+    combine.  State is ≤ |types|·2·B rows regardless of stream volume.
     The at-rest twin is ``operators/profile.py:psi_drift`` — identical
     cells ⇒ identical PSI for any reader.
     """
 
     from ..operators.profile import PSI_BUCKETS
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prev):
         part = (
             batch_df.selectExpr(
                 "event_type",
@@ -848,35 +837,19 @@ def stream_psi_cells(
             .groupBy("event_type", "period", "bucket")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        versions = _committed_versions(
-            state_dir, below=batch_id, parts=("cells",)
+        return _merged(
+            prev, part, ("event_type", "period", "bucket"), *_sums("c")
         )
-        if versions:
-            prev = sp.read.parquet(f"{state_dir}/v{max(versions)}/cells")
-            part = (
-                prev.unionByName(part)
-                .groupBy("event_type", "period", "bucket")
-                .agg(F.sum("c").alias("c"))
-            )
-        part.write.mode("overwrite").parquet(
-            f"{state_dir}/v{batch_id}/cells"
-        )
-        _gc_versions(state_dir, parts=("cells",))
 
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_versioned(
+        events, state_dir, checkpoint_dir, fold, ("cells",)
     )
 
 
 def read_psi_cells(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest committed PSI cell state, ordered."""
-    versions = _committed_versions(state_dir, parts=("cells",))
-    return (
-        spark.read.parquet(f"{state_dir}/v{max(versions)}/cells")
-        .orderBy("event_type", "period", "bucket")
+    return _read_latest(spark, state_dir, ("cells",)).orderBy(
+        "event_type", "period", "bucket"
     )
 
 
@@ -889,20 +862,16 @@ def stream_cms_cells(
     aggregate-then-sketch device of
     ``operators/sketches.py:cms_heavy_hitters``), folds the weighted
     tokens into D×W (row, bucket) partial counts, and merges them into
-    epoch-versioned state by SUM — exactly the CMS mergeability
-    property, so the drained state is bit-equal to the one-shot batch
-    sketch no matter how the stream was micro-batched.  Replay-safe
-    like ``stream_rollup_merge``/``stream_psi_cells``: a replayed batch
-    recomputes its version from the same predecessor, readers see the
-    highest complete version, and state is ≤ D·W rows regardless of
-    stream volume.
+    the state by SUM — exactly the CMS mergeability property, so the
+    drained state is bit-equal to the one-shot batch sketch no matter
+    how the stream was micro-batched.  State is ≤ D·W rows regardless
+    of stream volume.
     """
 
     from ..operators.sketches import CMS_D, _cms_bucket
     from ..operators.text import tokens_col
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prev):
         wc = (
             batch_df.select(
                 F.explode(tokens_col(F.col("text"))).alias("tok")
@@ -927,36 +896,16 @@ def stream_cms_cells(
             .groupBy("r", "bucket")
             .agg(F.sum("w").alias("c"))
         )
-        versions = _committed_versions(
-            state_dir, below=batch_id, parts=("cells",)
-        )
-        if versions:
-            prev = sp.read.parquet(f"{state_dir}/v{max(versions)}/cells")
-            part = (
-                prev.unionByName(part)
-                .groupBy("r", "bucket")
-                .agg(F.sum("c").alias("c"))
-            )
-        part.write.mode("overwrite").parquet(
-            f"{state_dir}/v{batch_id}/cells"
-        )
-        _gc_versions(state_dir, parts=("cells",))
+        return _merged(prev, part, ("r", "bucket"), *_sums("c"))
 
-    return (
-        docs.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_versioned(
+        docs, state_dir, checkpoint_dir, fold, ("cells",)
     )
 
 
 def read_cms_cells(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest committed CMS cell state, ordered."""
-    versions = _committed_versions(state_dir, parts=("cells",))
-    return (
-        spark.read.parquet(f"{state_dir}/v{max(versions)}/cells")
-        .orderBy("r", "bucket")
-    )
+    return _read_latest(spark, state_dir, ("cells",)).orderBy("r", "bucket")
 
 
 URL_SIGHTING_SCHEMA = T.StructType(
@@ -1030,14 +979,11 @@ def stream_partition_stats(
     ``profile.compaction_planner``'s per-month aggregate; the day
     grain is what makes ``files_now`` — distinct landing days —
     mergeable, bounded at ≤31 rows/month regardless of volume).
-    Epoch-versioned exactly like ``stream_rollup_merge``: replays
-    overwrite their own version, readers take the highest complete
-    one, so the table is exactly-once under crash/restart.
     """
 
-    def partial(df: DataFrame) -> DataFrame:
-        return (
-            df.selectExpr(
+    def fold(batch_df: DataFrame, prev):
+        part = (
+            batch_df.selectExpr(
                 "date_format(o_orderdate, 'yyyy-MM') AS part_month",
                 "to_date(o_orderdate) AS d",
                 "CAST(24 + octet_length(CAST(o_orderkey AS STRING))"
@@ -1050,30 +996,11 @@ def stream_partition_stats(
                 F.sum("b").alias("est_bytes"),
             )
         )
+        return _merged(
+            prev, part, ("part_month", "d"), *_sums("n_rows", "est_bytes")
+        )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        p = partial(batch_df)
-        versions = _committed_versions(state_dir, below=batch_id)
-        if versions:
-            prev = sp.read.parquet(f"{state_dir}/v{max(versions)}")
-            p = (
-                prev.unionByName(p)
-                .groupBy("part_month", "d")
-                .agg(
-                    F.sum("n_rows").alias("n_rows"),
-                    F.sum("est_bytes").alias("est_bytes"),
-                )
-            )
-        p.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        _gc_versions(state_dir)
-
-    return (
-        orders.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_versioned(orders, state_dir, checkpoint_dir, fold)
 
 
 def read_partition_stats(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1082,8 +1009,7 @@ def read_partition_stats(spark: SparkSession, state_dir: str) -> DataFrame:
     ``profile.compaction_planner``, so the two must be row-equal."""
     from ..operators.profile import COMPACT_SMALL_FRAC, COMPACT_TARGET_BYTES
 
-    versions = _committed_versions(state_dir)
-    days = spark.read.parquet(f"{state_dir}/v{max(versions)}")
+    days = _read_latest(spark, state_dir)
     p = days.groupBy("part_month").agg(
         F.sum("n_rows").alias("n_rows"),
         F.count(F.lit(1)).alias("files_now"),
@@ -1118,20 +1044,17 @@ def stream_source_volume(
     maintained by ingest instead of recomputed by a corpus scan (the
     verdict/contamination columns are the batch card's job: they need
     the corpus-wide dedup/decontam passes).  State is bounded by
-    |sources| x |langs| regardless of volume.  Epoch-versioned exactly
-    like ``stream_rollup_merge``: replays overwrite their own version,
-    readers take the highest complete one — exactly-once under
-    crash/restart."""
+    |sources| x |langs| regardless of volume."""
     from ..operators.text import tokens_col
 
-    def partial(df: DataFrame) -> DataFrame:
+    def fold(batch_df: DataFrame, prev):
         nt = (
             F.when(F.trim("text") == "", 0)
             .otherwise(F.size(tokens_col(F.col("text"))))
             .cast("long")
         )
-        return (
-            df.select(
+        part = (
+            batch_df.select(
                 "source",
                 "lang",
                 nt.alias("nt"),
@@ -1144,31 +1067,14 @@ def stream_source_volume(
                 F.sum("nc").alias("raw_chars"),
             )
         )
+        return _merged(
+            prev,
+            part,
+            ("source", "lang"),
+            *_sums("n_docs", "raw_tokens", "raw_chars"),
+        )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        p = partial(batch_df)
-        versions = _committed_versions(state_dir, below=batch_id)
-        if versions:
-            prev = sp.read.parquet(f"{state_dir}/v{max(versions)}")
-            p = (
-                prev.unionByName(p)
-                .groupBy("source", "lang")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("raw_tokens").alias("raw_tokens"),
-                    F.sum("raw_chars").alias("raw_chars"),
-                )
-            )
-        p.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        _gc_versions(state_dir)
-
-    return (
-        docs.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_versioned(docs, state_dir, checkpoint_dir, fold)
 
 
 def read_source_volume(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1176,8 +1082,7 @@ def read_source_volume(spark: SparkSession, state_dir: str) -> DataFrame:
     state — identical projection arithmetic to the volume columns of
     the batch ``curation.dataset_card``, so the two must be
     row-equal on the shared columns."""
-    versions = _committed_versions(state_dir)
-    sl = spark.read.parquet(f"{state_dir}/v{max(versions)}")
+    sl = _read_latest(spark, state_dir)
     per = (
         sl.withColumn(
             "mx",
@@ -1222,17 +1127,12 @@ def stream_lateness_counters(
     size, so the batch-local ORDER BY window is bounded by
     construction — the unbounded-grain running max lives in the BATCH
     twin, where it rides rankops.global_running_max.  Counters and the
-    watermark are additive/max monoids, so replays overwrite their own
-    version and readers take the highest complete one — exactly-once
-    under crash/restart."""
+    watermark are additive/max monoids."""
     from ..plans.events import LATENESS_THRESH_SEC
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        versions = _committed_versions(state_dir, below=batch_id)
-        prev = None
-        if versions:
-            prev = sp.read.parquet(f"{state_dir}/v{max(versions)}").collect()[0]
+    def fold(batch_df: DataFrame, prev):
+        if prev is not None:
+            prev = prev.collect()[0]
         w = (
             Window.orderBy("arrival_us", "event_id")
             .rowsBetween(Window.unboundedPreceding, -1)
@@ -1287,15 +1187,9 @@ def stream_lateness_counters(
             for d in LATENESS_THRESH_SEC:
                 adds[f"nl{d}"] = F.col(f"nl{d}") + F.lit(prev[f"nl{d}"])
             p = p.withColumns(adds)
-        p.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        _gc_versions(state_dir)
+        return p
 
-    return (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_versioned(ev, state_dir, checkpoint_dir, fold)
 
 
 def read_lateness_profile(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1305,8 +1199,7 @@ def read_lateness_profile(spark: SparkSession, state_dir: str) -> DataFrame:
     the batch audit can never disagree."""
     from ..plans.events import LATENESS_THRESH_SEC
 
-    versions = _committed_versions(state_dir)
-    s = spark.read.parquet(f"{state_dir}/v{max(versions)}")
+    s = _read_latest(spark, state_dir)
     structs = ", ".join(
         f"named_struct('allowed_sec', {d}L, 'n_late', nl{d})"
         for d in LATENESS_THRESH_SEC
@@ -1337,41 +1230,20 @@ def stream_drift_fingerprint(
     drift diff consumes can be maintained by ingest instead of a
     snapshot scan — exactly the deployment story the drift harness
     docstring promises ("fingerprints are persisted per run; only the
-    diff runs at read time").  Epoch-versioned state; replays overwrite
-    their own version — exactly-once under crash/restart."""
+    diff runs at read time")."""
 
-    def partial(df: DataFrame) -> DataFrame:
+    def fold(batch_df: DataFrame, prev):
         cents = F.round(F.col("value") * 100).cast("long")
-        return df.groupBy("event_type").agg(
+        part = batch_df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").isNull().cast("long")).alias("n_null"),
             F.sum(F.coalesce(cents, F.lit(0))).alias("sum_cents"),
         )
+        return _merged(
+            prev, part, ("event_type",), *_sums("n", "n_null", "sum_cents")
+        )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        p = partial(batch_df)
-        versions = _committed_versions(state_dir, below=batch_id)
-        if versions:
-            prev = sp.read.parquet(f"{state_dir}/v{max(versions)}")
-            p = (
-                prev.unionByName(p)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("n_null").alias("n_null"),
-                    F.sum("sum_cents").alias("sum_cents"),
-                )
-            )
-        p.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        _gc_versions(state_dir)
-
-    return (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_versioned(ev, state_dir, checkpoint_dir, fold)
 
 
 def diff_fingerprint_states(
@@ -1431,8 +1303,7 @@ def read_drift_fingerprint(spark: SparkSession, state_dir: str) -> DataFrame:
     (tbl, seg, stat, val) rows of ``profile.drift_fingerprint`` —
     identical half-add ppm arithmetic, so the ingest-maintained and
     snapshot-scanned fingerprints can never disagree."""
-    versions = _committed_versions(state_dir)
-    s = spark.read.parquet(f"{state_dir}/v{max(versions)}")
+    s = _read_latest(spark, state_dir)
     return (
         s.selectExpr(
             "'events' AS tbl",
@@ -1456,14 +1327,13 @@ def stream_centroid_sums(
     mass, and this operator makes "rebuild" free — the per-(label,
     dim) integer micro-sums and member counts behind
     ``similarity._structured_centroids`` are additive monoids, so the
-    FRESH centroid table is maintained by ingest (epoch-versioned
-    state, replay-overwrite exactly-once) and reading the index is one
-    tiny state read instead of a corpus scan.  ``emb`` must carry
+    FRESH centroid table is maintained by ingest and reading the index
+    is one tiny state read instead of a corpus scan.  ``emb`` must carry
     (vec_id, label, v: array<double>)."""
 
-    def partial(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
+    def fold(batch_df: DataFrame, prev):
+        part = (
+            batch_df.select(
                 "label",
                 F.posexplode(
                     F.transform(
@@ -1477,27 +1347,9 @@ def stream_centroid_sums(
                 F.count(F.lit(1)).alias("n"),
             )
         )
+        return _merged(prev, part, ("label", "dim"), *_sums("s", "n"))
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        p = partial(batch_df)
-        versions = _committed_versions(state_dir, below=batch_id)
-        if versions:
-            prev = sp.read.parquet(f"{state_dir}/v{max(versions)}")
-            p = (
-                prev.unionByName(p)
-                .groupBy("label", "dim")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            )
-        p.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        _gc_versions(state_dir)
-
-    return (
-        emb.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_versioned(emb, state_dir, checkpoint_dir, fold)
 
 
 def read_centroids(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1505,8 +1357,7 @@ def read_centroids(spark: SparkSession, state_dir: str) -> DataFrame:
     shape of ``similarity._structured_centroids`` — identical integer
     micro-grid arithmetic (sum DIV count, then /1e6), so the
     ingest-maintained index and the batch scan can never disagree."""
-    versions = _committed_versions(state_dir)
-    s = spark.read.parquet(f"{state_dir}/v{max(versions)}")
+    s = _read_latest(spark, state_dir)
     per = s.selectExpr("label", "dim", "s DIV n AS cb")
     return (
         per.groupBy("label")
@@ -1628,28 +1479,21 @@ def stream_funnel_state(
     (axis, user) plus the horizon-bounded pending buffer — the
     [[events_watermark_state_size]] capacity class.
 
-    Exactly-once: epoch-versioned parquet state (global watermark row +
-    user chains + pending events), replay-overwrite, readers take the
-    highest complete version; empty micro-batches carry the horizons
-    forward (greatest() merge, never NULL regression)."""
+    State parts: the global watermark row, the user chains and the
+    pending events (``FUNNEL_STATE_PARTS``); empty micro-batches carry
+    the horizons forward (greatest() merge, never NULL regression)."""
     from ..plans.events import ARRIVAL_JITTER_SEC, FUNNEL_STEP_WINDOW_SEC
 
     w_us = FUNNEL_STEP_WINDOW_SEC * 1_000_000
     d_us = buffer_sec * 1_000_000
     j_us = ARRIVAL_JITTER_SEC * 1_000_000
 
-    def merge_batch(bdf: DataFrame, batch_id: int) -> None:
+    def fold(bdf: DataFrame, prev):
         sp = bdf.sparkSession
-        versions = _committed_versions(
-            state_dir, below=batch_id, parts=FUNNEL_STATE_PARTS
-        )
-        prev_g = None
-        prev_users = prev_pending = None
-        if versions:
-            base = f"{state_dir}/v{max(versions)}"
-            prev_g = sp.read.parquet(f"{base}/global").collect()[0]
-            prev_users = sp.read.parquet(f"{base}/users")
-            prev_pending = sp.read.parquet(f"{base}/pending")
+        prev_g = prev_users = prev_pending = None
+        if prev is not None:
+            prev_g, prev_users, prev_pending = prev
+            prev_g = prev_g.collect()[0]
         # per-event watermark: strictly-earlier arrivals in this batch,
         # greatest()-ed with the stored cross-batch watermark (the
         # batch-local window is bounded by trigger size)
@@ -1744,19 +1588,13 @@ def stream_funnel_state(
                 "left_anti",
             )
         ).localCheckpoint(eager=True)
-        out = f"{state_dir}/v{batch_id}"
-        sp.createDataFrame(
+        g_out = sp.createDataFrame(
             [(wm_now, amax_now)], "wm_us long, amax_us long"
-        ).write.mode("overwrite").parquet(f"{out}/global")
-        users_out.write.mode("overwrite").parquet(f"{out}/users")
-        pend.write.mode("overwrite").parquet(f"{out}/pending")
-        _gc_versions(state_dir, parts=FUNNEL_STATE_PARTS)
+        )
+        return g_out, users_out, pend
 
-    return (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_versioned(
+        ev, state_dir, checkpoint_dir, fold, FUNNEL_STATE_PARTS
     )
 
 
@@ -1771,10 +1609,7 @@ def read_funnel_conversions(
     from ..plans.events import FUNNEL_STEP_WINDOW_SEC
 
     w_us = FUNNEL_STEP_WINDOW_SEC * 1_000_000
-    versions = _committed_versions(state_dir, parts=FUNNEL_STATE_PARTS)
-    base = f"{state_dir}/v{max(versions)}"
-    users = spark.read.parquet(f"{base}/users")
-    pend = spark.read.parquet(f"{base}/pending")
+    _, users, pend = _read_latest(spark, state_dir, FUNNEL_STATE_PARTS)
     folded = _fold_funnel_chain(pend, users, w_us)
     full = folded.unionByName(
         users.join(
@@ -1830,7 +1665,7 @@ def stream_misroute_counters(
     Misroute — assignment ≠ true label — is the direct cause of the
     staleness recall loss, and it is a per-vector ADDITIVE statistic,
     so the monitor is the lateness-counter twin shape: one tiny state
-    row, replay-overwrite exactly-once, empty batches are no-ops.
+    row, empty batches are no-ops.
 
     The assignment replicates ``sim_index_misroute_decay``'s argmax
     bit-for-bit: cosine ppm-frozen to an integer before the argmax,
@@ -1842,7 +1677,7 @@ def stream_misroute_counters(
     aggregate.  At 100 TB this is the per-ingest-batch index-health
     counter a rebuild trigger reads."""
 
-    def merge_batch(bdf: DataFrame, batch_id: int) -> None:
+    def fold(bdf: DataFrame, prev):
         from ..operators.similarity import _dot, _norm
 
         sp = bdf.sparkSession
@@ -1884,24 +1719,15 @@ def stream_misroute_counters(
                 ),
             }
         )
-        versions = _committed_versions(state_dir, below=batch_id)
-        if versions:
-            prev = sp.read.parquet(
-                f"{state_dir}/v{max(versions)}"
-            ).collect()[0]
-            p = p.selectExpr(
-                f"n + {prev['n']}L AS n",
-                f"n_mis + {prev['n_mis']}L AS n_mis",
-            )
-        p.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        _gc_versions(state_dir)
+        if prev is None:
+            return p
+        prev = prev.collect()[0]
+        return p.selectExpr(
+            f"n + {prev['n']}L AS n",
+            f"n_mis + {prev['n_mis']}L AS n_mis",
+        )
 
-    return (
-        vecs.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_versioned(vecs, state_dir, checkpoint_dir, fold)
 
 
 def read_misroute_rate(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1909,8 +1735,7 @@ def read_misroute_rate(spark: SparkSession, state_dir: str) -> DataFrame:
     the same arithmetic as ``sim_index_misroute_decay``'s
     misroute_stale_ppm column, so monitor and batch audit can never
     disagree."""
-    versions = _committed_versions(state_dir)
-    s = spark.read.parquet(f"{state_dir}/v{max(versions)}")
+    s = _read_latest(spark, state_dir)
     return s.selectExpr(
         "n",
         "n_mis",

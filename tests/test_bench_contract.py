@@ -205,12 +205,12 @@ CONTROL_SOURCE_HASHES = {
     "events_user_stats": "9a53356690f0",
     "events_transition_matrix": "a4780a1f6055",
     "events_sliding_windows": "2dfc0e5c86a9",
-    "basket_pair_cooccurrence": "aa1f70527517",
-    "diff_table_reconcile": "be4e5ff8ff9e",
-    "dedup_containment": "de347daf203e",
-    "sketch_theta_set_ops": "9f258ef05d08",
-    "profile_join_cardinality_audit": "d33b78ef2ccc",
-    "customer_rfm_segments": "ac1518ae363c",
+    "trimmed_mean_price": "f85a76363295",
+    "q8_market_share": "28dfa5d80339",
+    "profile_id_gap_islands": "0b1d3044aa79",
+    "sample_ipf_raking": "c1eb54bb7b5e",
+    "profile_zorder_pruning_gain": "a400ba2a21aa",
+    "stats_poisson_bootstrap_ci": "dcaac35cd4c5",
 }
 
 

@@ -1445,3 +1445,22 @@ def test_streaming_misroute_equals_batch_decay_row(spark, tmp_path):
     q3.awaitTermination()
     again = read_misroute_rate(spark, mis_state).collect()[0]
     assert tuple(again) == tuple(got)
+
+
+def test_read_dedup_decisions_skips_torn_partition(spark, tmp_path):
+    """A decisions partition without ``_SUCCESS`` — a crash mid-write —
+    is invisible to readers until its micro-batch replays and rewrites
+    it; the committed partitions still read."""
+    from hauser_spark.streaming import read_dedup_decisions
+
+    decisions = tmp_path / "lsh_index" / "decisions"
+    schema = "d_new long, d_old long, jaccard double"
+    spark.createDataFrame([(10, 1, 0.9)], schema).write.parquet(
+        str(decisions / "batch=0")
+    )
+    torn = decisions / "batch=99"
+    spark.createDataFrame([(99, 2, 0.95)], schema).write.parquet(str(torn))
+    (torn / "_SUCCESS").unlink()
+
+    got = read_dedup_decisions(spark, str(tmp_path / "lsh_index")).collect()
+    assert [(r.d_new, r.d_old) for r in got] == [(10, 1)]

@@ -336,6 +336,45 @@ def test_only_memo_reads_application_id():
     assert not offenders, offenders
 
 
+def test_only_the_fold_helpers_touch_versioned_state():
+    """The versioned-state protocol (commit rule, replay-overwrite, the
+    two-version GC horizon) lives in ``streaming/incremental``'s
+    ``_fold_versioned`` and ``_read_latest``; no other code in
+    ``hauser_spark/streaming/`` lists or collects versions or starts a
+    ``foreachBatch`` query itself.  One exception: the minhash index
+    (``stream_minhash_dedup``) is append-only ``batch=N`` partitions,
+    not versioned state, so it starts its own ``foreachBatch``."""
+    import ast
+    import pathlib
+
+    import hauser_spark.streaming
+
+    root = pathlib.Path(hauser_spark.streaming.__file__).parent
+    guarded = {"_committed_versions", "_gc_versions", "foreachBatch"}
+    allowed = {
+        "_fold_versioned": {"_gc_versions", "foreachBatch"},
+        "_read_latest": {"_committed_versions"},
+        "stream_minhash_dedup": {"foreachBatch"},
+    }
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        ok = {}
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef) and fn.name in allowed:
+                for line in range(fn.lineno, fn.end_lineno + 1):
+                    ok[line] = allowed[fn.name]
+        for n in ast.walk(tree):
+            name = (
+                n.id if isinstance(n, ast.Name)
+                else n.attr if isinstance(n, ast.Attribute)
+                else None
+            )
+            if name in guarded and name not in ok.get(n.lineno, ()):
+                offenders.append(f"{path.name}:{n.lineno} {name}")
+    assert not offenders, offenders
+
+
 def test_table_memo_invalidates_on_layout_change(spark, tmp_path, monkeypatch):
     """The load_table memo is keyed by the RESOLVED path: after a layout
     compaction redirects source → compacted copy, the memo must miss and

@@ -11,6 +11,7 @@ loads, first-of-day WRITE_TRUNCATE, W6 partition-grain repair
 
 import datetime as dt
 import json
+import logging
 import os
 
 import pytest
@@ -332,6 +333,33 @@ def test_service_run_end_to_end_row_grain(spark, tmp_path):
         '{"user_plan_str":"p0"}', '{"user_plan_str":"p1"}', '{"user_plan_str":"p2"}',
     ]
     assert svc.database.last_sync_point(repair=False) == DAY1 + 3 * HOUR
+
+
+def test_run_logs_each_backoff_retry(spark, tmp_path, caplog):
+    """Every retry of ``run``'s backoff loop logs one warning with the
+    exception, the backoff step and the sleep."""
+    svc = _service(spark, tmp_path, partitioned=False)
+    create, failures = svc.client.create_export, []
+
+    def flaky_create(*args):
+        if len(failures) < 2:
+            failures.append(ConnectionError(f"transient {len(failures)}"))
+            raise failures[-1]
+        return create(*args)
+
+    svc.client.create_export = flaky_create
+    sleeps = []
+    with caplog.at_level(logging.WARNING, logger="hauser_spark.service"):
+        assert svc.run(max_bundles=10, sleep=sleeps.append) == 3
+    warnings = [r for r in caplog.records if r.name == "hauser_spark.service"]
+    assert len(warnings) == 2
+    backoff = svc.config.backoff.total_seconds()
+    assert sleeps == [backoff, 2 * backoff]
+    for step, (rec, exc) in enumerate(zip(warnings, failures)):
+        assert rec.levelno == logging.WARNING
+        assert rec.exc_info[1] is exc
+        assert rec.args == (step, sleeps[step])
+    assert _loaded(svc.database) == _expected()
 
 
 @pytest.mark.parametrize("partitioned", [False, True], ids=["row_grain", "partitioned"])
